@@ -1,11 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{StallProbe, jarr, loadavg, median, timed}
 import graft.operators.AsofJoin
+import graft.util.Env
 
 /** Adversarial pricing of the as-of join's scale claim: the scaladoc
   * argues the declarative formulation (`l JOIN r ON key AND r.ts <=
@@ -30,52 +30,24 @@ import graft.operators.AsofJoin
   * union row count, and the hot key's share. */
 object AsofBench {
 
-  private def loadavg: String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-    catch { case _: Throwable => "" }
-
-  private object StallProbe {
-    @volatile private var stallNanos = 0L
-    def start(): Unit = {
-      val t = new Thread(() => {
-        while (true) {
-          val t0 = System.nanoTime()
-          try Thread.sleep(100) catch { case _: InterruptedException => }
-          val over = System.nanoTime() - t0 - 100000000L
-          if (over > 150000000L) stallNanos += over
-        }
-      }, "graft-stall-probe")
-      t.setDaemon(true)
-      t.start()
-    }
-    def totalSec: Double = stallNanos / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 32, min = 1)
+    val runs = Env.int("SPARK_GRAFT_BENCH_RUNS", 3, min = 1)
     // defaults keep the naive arm's pair blowup ~13M rows (hot key
     // 5k x 5k / 2 + uniform tail) — decisive but minutes-bounded;
     // raise LEFT/RIGHT/HOTPCT to watch it diverge quadratically
-    val nLeft = sys.env.getOrElse("SPARK_GRAFT_ASOF_LEFT", "50000").toLong
-    val nRight = sys.env.getOrElse("SPARK_GRAFT_ASOF_RIGHT", "50000").toLong
-    val keys = sys.env.getOrElse("SPARK_GRAFT_ASOF_KEYS", "1000").toLong
-    val hotPct = sys.env.getOrElse("SPARK_GRAFT_ASOF_HOTPCT", "10").toInt
+    val nLeft = Env.long("SPARK_GRAFT_ASOF_LEFT", 50000, min = 1)
+    val nRight = Env.long("SPARK_GRAFT_ASOF_RIGHT", 50000, min = 1)
+    val keys = Env.long("SPARK_GRAFT_ASOF_KEYS", 1000, min = 1)
+    val hotPct = Env.int("SPARK_GRAFT_ASOF_HOTPCT", 10, min = 0, max = 100)
     // the naive arm's join output is quadratic in the hot-key share;
     // past ~20% hot it stops being minutes-bounded — the high rungs
     // of the skew ladder run asof-vs-salted only (NAIVE=0)
-    val withNaive = sys.env.getOrElse("SPARK_GRAFT_ASOF_NAIVE", "1") == "1"
-    val slices = sys.env.getOrElse("SPARK_GRAFT_ASOF_SLICES", "32").toInt
+    val withNaive = Env.bool("SPARK_GRAFT_ASOF_NAIVE", true)
+    val slices = Env.int("SPARK_GRAFT_ASOF_SLICES", 32, min = 1)
     val spanSec = 30L * 24 * 3600
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
+    val spark = Harness.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // deterministic synthetic sides: user 0 is the hot key on both
@@ -110,13 +82,12 @@ object AsofBench {
     // per-trigger price the batch arms never measure. The emitted
     // match set is asserted equal to the batch operator's (identity
     // first, then the clock), exactly like the batch arms.
-    if (sys.env.getOrElse("SPARK_GRAFT_ASOF_MODE", "batch") == "stream") {
+    if (Env.str("SPARK_GRAFT_ASOF_MODE", "batch") == "stream") {
       import graft.streaming.EventPipelines
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import spark.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val batchSize =
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "20000").toInt
+      val batchSize = Env.int("SPARK_GRAFT_STREAM_BATCH", 20000, min = 1)
       // event-time delivery order computed by SPARK (global sort —
       // ordering by the timestamp column is ordering by its micros)
       // and streamed to the driver batch-by-batch via
@@ -145,10 +116,7 @@ object AsofBench {
       val perBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
       try {
         batchIt.zipWithIndex.foreach { case (b, k) =>
-          val t0 = System.nanoTime()
-          mem.addData(b.toSeq: _*)
-          q.processAllAvailable()
-          perBatch += (System.nanoTime() - t0) / 1e9
+          perBatch += timed { mem.addData(b.toSeq: _*); q.processAllAvailable() }
           System.err.println(f"[asof-bench] stream batch $k " +
             f"(${b.size} rows) ${perBatch.last}%.2f s")
         }
@@ -166,31 +134,20 @@ object AsofBench {
         }
       } finally q.stop()
       val stallSec = StallProbe.totalSec - stall0
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
       val warm = if (perBatch.size > 1) perBatch.drop(1).toSeq
                  else perBatch.toSeq
       val json =
-        s"""{"metric":"stream_asof_batch_median","value":${med(warm)}""" +
+        s"""{"metric":"stream_asof_batch_median","value":${median(warm)}""" +
           s""","unit":"sec","cold_first_batch_sec":${
             perBatch.headOption.getOrElse(-1.0)}""" +
-          s""","per_batch_sec":${perBatch.map(x =>
-            math.round(x * 1000) / 1000.0).mkString("[", ",", "]")}""" +
+          s""","per_batch_sec":${jarr(perBatch.toSeq)}""" +
           s""","batches":${perBatch.size},"batch_rows":$batchSize""" +
           s""","n_left":$nLeft,"n_right":$nRight,"keys":$keys""" +
           s""","hot_pct":$hotPct""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
+          s""","stall_sec":${Harness.round(stallSec, 2)}""" +
           s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
           s""","cpus":"$cpus"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "bench_asof_stream.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[asof-bench] write $out failed: $e") }
+      Harness.emit("asof-bench", "bench_asof_stream.json", json)
       spark.stop()
       return
     }
@@ -242,76 +199,49 @@ object AsofBench {
     val blowup = if (withNaive) naiveJoin().count() else -1L
     val unionRows = nLeft + nRight
 
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache(); System.gc()
-    }
     StallProbe.start()
     val loadBefore = loadavg
-    val asofT = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val saltT = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val naiveT = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val stalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-    for (r <- 0 until runs) {
-      val s0 = StallProbe.totalSec
-      val arms: Seq[(String, () => Double)] = Seq(
-        "asof" -> (() => timed(
-          asofArm().write.format("noop").mode("overwrite").save())),
-        "salted" -> (() => timed(
-          saltedArm().write.format("noop").mode("overwrite").save()))) ++
-        (if (withNaive) Seq("naive" -> (() => timed(
-          naiveArm().write.format("noop").mode("overwrite").save())))
-         else Nil)
-      val order = if (r % 2 == 0) arms else arms.reverse
-      val got = order.map { case (nm, f) => val t = f(); sweep(); nm -> t }
-        .toMap
-      asofT += got("asof"); saltT += got("salted")
-      naiveT += got.getOrElse("naive", -1.0)
-      stalls += StallProbe.totalSec - s0
+    val arms = Seq[(String, () => DataFrame)](
+      "asof" -> (() => asofArm()), "salted" -> (() => saltedArm())) ++
+      (if (withNaive) Seq("naive" -> (() => naiveArm())) else Nil)
+    val timings = Harness.alternate(runs, arms,
+        () => Harness.sweep(spark, checkpoints = false)) { (_, arm) =>
+      timed(arm().write.format("noop").mode("overwrite").save())
+    } { (r, got, stall) =>
       System.err.println(f"[asof-bench] run $r asof=${got("asof")}%.2f s " +
         f"salted=${got("salted")}%.2f s " +
         f"naive=${got.getOrElse("naive", -1.0)}%.2f s " +
-        f"stall=${stalls.last}%.2f s")
+        f"stall=$stall%.2f s")
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    def jarr(xs: Seq[Double]) =
-      xs.map(x => math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
+    val asofT = timings.times("asof")
+    val saltT = timings.times("salted")
+    val naiveT = timings.times.getOrElse("naive", Nil)
     // a skipped naive arm must publish null, not a -1 sentinel: a
     // consumer trending "speedup" across rungs would silently ingest
     // a negative garbage ratio (caught on the r12 h50/h90/h100
     // artifacts and fixed by regeneration)
     val naiveMedianJson =
-      if (withNaive) median(naiveT.toSeq).toString else "null"
+      if (withNaive) median(naiveT).toString else "null"
     val speedupJson =
-      if (withNaive) (median(naiveT.toSeq) / median(asofT.toSeq)).toString
+      if (withNaive) (median(naiveT) / median(asofT)).toString
       else "null"
-    val naiveRunsJson = if (withNaive) jarr(naiveT.toSeq) else "null"
+    val naiveRunsJson = if (withNaive) jarr(naiveT) else "null"
     val blowupJson = if (withNaive) blowup.toString else "null"
     val json =
-      s"""{"metric":"asof_vs_naive_median","value":${median(asofT.toSeq)}""" +
+      s"""{"metric":"asof_vs_naive_median","value":${median(asofT)}""" +
         s""","unit":"sec","naive_median":$naiveMedianJson""" +
-        s""","salted_median":${median(saltT.toSeq)},"slices":$slices""" +
+        s""","salted_median":${median(saltT)},"slices":$slices""" +
         s""","speedup":$speedupJson""" +
-        s""","salted_over_asof":${median(asofT.toSeq) / median(saltT.toSeq)}""" +
-        s""","asof_runs":${jarr(asofT.toSeq)},"naive_runs":$naiveRunsJson""" +
-        s""","salted_runs":${jarr(saltT.toSeq)}""" +
+        s""","salted_over_asof":${median(asofT) / median(saltT)}""" +
+        s""","asof_runs":${jarr(asofT)},"naive_runs":$naiveRunsJson""" +
+        s""","salted_runs":${jarr(saltT)}""" +
         s""","naive_join_rows":$blowupJson,"asof_union_rows":$unionRows""" +
         s""","n_left":$nLeft,"n_right":$nRight,"keys":$keys""" +
         s""","hot_pct":$hotPct,"with_naive":$withNaive""" +
-        s""","stall_sec":${jarr(stalls.toSeq)}""" +
+        s""","stall_sec":${jarr(timings.stallSec)}""" +
         s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
         s""","cpus":"$cpus"}"""
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_asof.json")
-    try Files.writeString(Paths.get(out), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[asof-bench] write $out failed: $e") }
+    Harness.emit("asof-bench", "bench_asof.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+
+import graft.Harness.{StallProbe, loadavg, median}
+import graft.util.Env
 
 /** Benchmark harness. One JVM, `SPARK_GRAFT_BENCH_RUNS` (default 3)
   * back-to-back runs of the full suite, per-query MEDIAN / min / max —
@@ -47,74 +48,18 @@ object Bench {
       "q_bloom_bits_seeded", "q_bloom_membership_seeded",
       "q_decontaminate_bloomframe_seeded")
 
-  private def loadavg: String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-    catch { case _: Throwable => "" }
-
-  /** Host-stall probe: a daemon thread sleeps 100 ms in a loop and,
-    * whenever the sleep actually took over 250 ms, accumulates the
-    * oversleep — time the guest simply did not run. On this class of VM (Firecracker) host CPU
-    * oversubscription is INVISIBLE to every guest metric (steal stays
-    * 0 — the steal-time MSR isn't exposed — loadavg/PSI only see
-    * guest-side queuing), yet it freely multiplies wall-clock
-    * timings; a sleeper that oversleeps is the one guest-visible
-    * witness. Per-run deltas land in the bench JSON as `stall_sec`
-    * so a noise-poisoned run is identifiable from the artifact alone
-    * instead of by cross-round forensics (the round-4/5 lesson).
-    */
-  private object StallProbe {
-    @volatile private var stallNanos = 0L
-    def start(): Unit = {
-      val t = new Thread(() => {
-        while (true) {
-          val t0 = System.nanoTime()
-          try Thread.sleep(100) catch { case _: InterruptedException => }
-          val over = System.nanoTime() - t0 - 100000000L
-          if (over > 150000000L) stallNanos += over
-        }
-      }, "graft-stall-probe")
-      t.setDaemon(true)
-      t.start()
-    }
-    def totalSec: Double = stallNanos / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val sfDir = Harness.sfDir
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 32, min = 1)
+    val runs = Env.int("SPARK_GRAFT_BENCH_RUNS", 3, min = 1)
     // initial shuffle parallelism: defaults to cores (the driver's
     // contract for sf0.1) but overridable for scale runs — partitions
     // sized for sf0.1 spill at sf1+, and AQE only coalesces DOWN from
     // the initial number, it never splits an oversized non-skewed
     // partition, so the initial count must scale with the data
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the query surface (static conf,
-      // default 100 entries): a 183-query suite generates ~3-4k
-      // distinct codegen classes, so at the default every query's
-      // classes are evicted before its next execution and EVERY run
-      // re-pays Janino compilation + JIT tier-up (the per-query
-      // codegen witness read the same nonzero count in every run).
-      // Not a toy-scale knob: a production driver hosting this many
-      // distinct queries sizes the compiler cache to its plan
-      // inventory the same way; data-independent, affects no result.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // a >10 s JVM freeze (32 GiB full GC, or the host stalls the
-      // probe documents) breaches the default executor-heartbeat RPC
-      // timeout and kills the whole SparkContext mid-suite — an sf1
-      // run died exactly this way. Stretch the tolerance so a stall
-      // costs a timing, not the harness.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shuffle = Env.int("SPARK_GRAFT_SHUFFLE", cpus, min = 1)
+    val spark = Harness.session(cpus,
+      "spark.sql.shuffle.partitions" -> shuffle.toString)
     // JVM/scheduler warmup so the first query's number is the query,
     // not classloading + first-scan machinery (parquet reader,
     // broadcast, noop writer, AQE first-use — round-2 finding).
@@ -139,18 +84,6 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     }
 
-    // between-query hygiene (round-2/3 findings): drop persisted
-    // intermediates, sweep checkpoint blocks clearCache can't see
-    // (blocking — async removal would overlap the next timed query),
-    // and collect the previous query's garbage outside the next
-    // query's timer (a 32 GiB full GC is multi-second).
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge
-        .unpersistAll(spark, blocking = true)
-      System.gc()
-    }
-
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
     // ---- per-QUERY witnesses (r13, after the r12 in-suite
     // interference case: q_dedup_embedding_incremental 32.4 s
@@ -165,7 +98,7 @@ object Bench {
     // SPARK_GRAFT_WITNESS=0 disables the per-query witness machinery
     // entirely (no listener, no bus drain) — the control arm for
     // pricing the witness's own overhead against a witness-free run
-    val witnessOn = sys.env.getOrElse("SPARK_GRAFT_WITNESS", "1") != "0"
+    val witnessOn = Env.bool("SPARK_GRAFT_WITNESS", true)
     val qSpill = new java.util.concurrent.atomic.AtomicLong(0L)
     val qPeakMem = new java.util.concurrent.atomic.AtomicLong(0L)
     if (witnessOn) spark.sparkContext.addSparkListener(
@@ -232,7 +165,7 @@ object Bench {
     // healthy query (sf0.1 slowest ≈ 7 s; sf1 ≈ 100 s) — this is a
     // tourniquet for pathology, not a performance gate.
     val queryTimeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "900").toLong
+      Env.long("SPARK_GRAFT_QUERY_TIMEOUT_SEC", 900, min = 0)
     // noop write, not count(): a count prunes every projection
     // expression out of map-only queries and would time a bare scan
     def timeOne(name: String): Double = {
@@ -298,13 +231,13 @@ object Bench {
           f"[bench] < $name FAILED after $secs%.1f s: ${e.getMessage}")
         witness()
         errors += name; -1.0
-      } finally sweep()
+      } finally Harness.sweep(spark)
     }
 
     val allNames = SparkEntry.queries.keys.toSeq.sorted
     // comma-separated subset for isolating one query's behavior at a
     // given SF (diagnostics only — artifacts of record run the suite)
-    val picked = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
+    val picked = Env.opt("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(subset) =>
         val want = subset.split(",").map(_.trim).filter(_.nonEmpty).toSet
         val unknown = want -- allNames.toSet
@@ -319,8 +252,7 @@ object Bench {
     // enter the medians) — artifacts of record keep them (default
     // off), and the JSON records the mode so a skipping run can't
     // masquerade as a full one.
-    val skipOracleOnly = sys.env.get("SPARK_GRAFT_SKIP_ORACLE_ONLY")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
+    val skipOracleOnly = Env.bool("SPARK_GRAFT_SKIP_ORACLE_ONLY", false)
     val names = if (skipOracleOnly) picked.filterNot(oracleOnly) else picked
     val headlineNames = names.filterNot(oracleOnly)
     val oracleNames = names.filter(oracleOnly)
@@ -335,8 +267,8 @@ object Bench {
     // ONLY those; if none do, all runs are used and the artifact says
     // so loudly (`stall_poisoned: true`), so a noisy number can never
     // again masquerade as a clean one.
-    val stallMax = sys.env.getOrElse("SPARK_GRAFT_STALL_MAX", "5.0").toDouble
-    val maxExtra = sys.env.getOrElse("SPARK_GRAFT_STALL_RETRIES", "3").toInt
+    val stallMax = Env.double("SPARK_GRAFT_STALL_MAX", 5.0, min = 0)
+    val maxExtra = Env.int("SPARK_GRAFT_STALL_RETRIES", 3, min = 0)
     // GC-time witness next to the stall witness: the probe counts
     // EVERY oversleep, and a stop-the-world collection pauses the
     // probe exactly like a host stall — `gc_sec` (MX-bean collection
@@ -387,7 +319,7 @@ object Bench {
     // data, minutes apart) isolates in-suite interference from
     // environment drift — also how a cross-round per-query drift
     // gets attributed to code vs noise without a bisect
-    val isoNames = sys.env.getOrElse("SPARK_GRAFT_ISOLATE",
+    val isoNames = Env.str("SPARK_GRAFT_ISOLATE",
         "q_dedup_clusters_jaccard")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
       .filter(SparkEntry.queries.contains)
@@ -395,12 +327,6 @@ object Bench {
       isoNames.map(n => n -> (1 to runs).map(_ => timeOne(n))).toMap
     val loadAfter = loadavg
 
-    def median(xs: Seq[Double]): Double = {
-      val ok = xs.filter(_ >= 0).sorted
-      if (ok.isEmpty) -1.0
-      else if (ok.size % 2 == 1) ok(ok.size / 2)
-      else (ok(ok.size / 2 - 1) + ok(ok.size / 2)) / 2
-    }
     def series(n: String): Seq[Double] =
       if (oracleOnly(n)) Seq(oracleTimes(n)) else perRun.map(_(n))
     val med = names.map(n => n -> median(series(n))).toMap
@@ -428,13 +354,8 @@ object Bench {
         s""","runs":$runs,"attempts":${attempts.size},"queries":${jmap(med)}""" +
         s""","queries_min":${jmap(mins)},"queries_max":${jmap(maxs)}""" +
         s""","per_run_total":${perRun.map(runTotal).mkString("[", ",", "]")}""" +
-        // raw Doubles: Double.toString is locale-independent, while a
-        // locale-sensitive `f"%.2f"` writes `0,52` under comma-decimal
-        // JVM locales and breaks the JSON
-        s""","stall_sec":${stallPerRun.map(s => math.round(s * 100) / 100.0)
-          .mkString("[", ",", "]")}""" +
-        s""","gc_sec":${gcPerRun.map(s => math.round(s * 100) / 100.0)
-          .mkString("[", ",", "]")}""" +
+        s""","stall_sec":${Harness.jarr(stallPerRun, 2)}""" +
+        s""","gc_sec":${Harness.jarr(gcPerRun.toSeq, 2)}""" +
         s""","stall_max":$stallMax,"stall_poisoned":$stallPoisoned""" +
         // quiet_runs < runs means retries ran out with a SHORT quiet
         // sample: medians rest on fewer samples than requested even
@@ -461,12 +382,7 @@ object Bench {
         s""","isolated":${jmap(isoNames.map(n => n -> median(iso(n))).toMap)}""" +
         s""","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"""" +
         s""","errors":$errs,"cpus":"$cpus","shuffle":"$shuffle","sf":"$sfDir"}"""
-    // stdout is full of sbt/log4j noise; also write the line to a file
-    // so the driver's parse can't fail silently.
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try Files.writeString(Paths.get(out), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] write $out failed: $e") }
+    Harness.emit("bench", "bench_out.json", json)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness.timed
+import graft.util.Env
 
 /** Plan/pushdown audit tool: for each query (args, or all), print the
   * isolated wall time and the formatted physical plan. Source for
@@ -19,22 +20,8 @@ object Explain {
       else (args.headOption.getOrElse("/tmp/explain.txt"), args.drop(1).toSeq)
     val names = if (rest.nonEmpty) rest
       else SparkEntry.queries.keys.toSeq.sorted
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the query surface (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // stall tolerance, as Bench: a >10 s freeze must not kill the
-      // context mid-audit
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(Env.int("SPARK_GRAFT_CPUS", 8, min = 1))
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     names.foreach { name =>
@@ -48,25 +35,20 @@ object Explain {
       // its warm run a fully-populated cache and the "warm" number
       // measures a cache read, not the query (the round-2 PERF.md
       // q_dedup_clusters 2.74 s vs BENCH 18.9 s discrepancy).
-      def timed(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = timed()
-      spark.sharedState.cacheManager.clearCache()
-      // also free checkpoint blocks so `warm` re-derives them like a
-      // fresh run would (clearCache can't see them — CheckpointBridge)
-      org.apache.spark.sql.graft.CheckpointBridge.unpersistAll(spark, blocking = true)
-      val warm = timed()
+      def run(): Double =
+        timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      val cold = run()
+      // free cached and checkpoint blocks so `warm` re-derives them
+      // like a fresh run would
+      Harness.sweep(spark, gc = false)
+      val warm = run()
       val n = fn(spark, sfDir).count()
       sb.append(
         f"==== $name%s rows=$n%d cold_sec=$cold%.3f warm_sec=$warm%.3f ====%n")
       sb.append(fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
       sb.append("\n")
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge.unpersistAll(spark, blocking = true)
+      Harness.sweep(spark, gc = false)
       println(f"[explain] $name%s cold=$cold%.3f warm=$warm%.3f rows=$n%d")
     }
     Files.writeString(Paths.get(out), sb.toString)

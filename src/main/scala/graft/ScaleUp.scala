@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Env
 
 /** Bench-data scaler: replicates a driver-generated sf directory K×
   * into a repo-local directory, producing the next scale factor for
@@ -52,15 +54,7 @@ object ScaleUp {
     val dst = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
     require(replicas >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Env.int("SPARK_GRAFT_CPUS", 32, min = 1))
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def stride(t: String, key: String): Long =

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+
+import graft.Harness.timed
+import graft.util.Env
 
 /** Diagnostic: run queries with a stage-level timing listener so
   * per-query wall-clock decomposes into jobs/stages/tasks — the
@@ -13,18 +15,8 @@ import org.apache.spark.sql.SparkSession
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(Env.int("SPARK_GRAFT_CPUS", 32, min = 1))
 
     case class St(var name: String = "", var submitted: Long = 0,
                   var completed: Long = 0, var tasks: Int = 0,
@@ -69,13 +61,10 @@ object StageProbe {
       val fn = SparkEntry.queries(name)
       // warm once so codegen/JIT are out of the decomposition
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge.unpersistAll(spark,
-        blocking = true)
+      Harness.sweep(spark, gc = false)
       stages.clear(); jobs.clear()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall =
+        timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       org.apache.spark.sql.graft.ListenerBridge
         .waitUntilEmpty(spark.sparkContext)
       import scala.jdk.CollectionConverters._
@@ -96,9 +85,7 @@ object StageProbe {
           f"in=${s.inRec}%9d sr=${s.srRec}%9d sw=${s.swRec}%9d " +
           f"${s.name.take(60)}")
       }
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge.unpersistAll(spark,
-        blocking = true)
+      Harness.sweep(spark, gc = false)
     }
     spark.stop()
   }

@@ -1,27 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.util.Env
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the query surface (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // stall tolerance, as Bench: a >10 s freeze must not kill the
-      // context mid-dump
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Env.int("SPARK_GRAFT_CPUS", 32, min = 1))
     new java.io.File(outDir).mkdirs()
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(deleteRec)
@@ -29,7 +15,7 @@ object Verify {
     }
     // optional dev filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just those
     // queries (the driver never sets it; full runs stay the default)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val only = Env.opt("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only match {
       case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
@@ -47,8 +33,7 @@ object Verify {
       // queries persist intermediates (census slice, IVF centroids,
       // pipeline stage); keep runs independent. clearCache misses
       // localCheckpoint blocks — sweep those too (CheckpointBridge).
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge.unpersistAll(spark, blocking = true)
+      Harness.sweep(spark, gc = false)
     }
     // manifest of every declared query, so the gate can flag a
     // rows-only query whose output is missing (no oracle ⇒ no other

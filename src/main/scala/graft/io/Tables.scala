@@ -2,6 +2,8 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.Env
+
 /** Parquet table catalog over a scale-factor directory.
   *
   * The reference reads Delta tables by name (`spark.read.format("delta")
@@ -119,8 +121,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     // task's scheduling cost. Production layouts are unaffected twice
     // over — the est<cores gate already no-ops there, and any input
     // past cores×64 KB (a few MB) still widens to all cores.
-    val minTaskBytes = math.max(1L,
-      sys.env.getOrElse("SPARK_GRAFT_WIDE_TASK_BYTES", "65536").toLong)
+    val minTaskBytes = Tables.wideTaskBytes
     val bytes = files.map(_.getLen).sum
     if (est > 0 && est < cores) {
       val width = math.max(est,
@@ -129,4 +130,12 @@ final case class Tables(spark: SparkSession, dir: String) {
       if (width > est) df.repartition(width) else df
     } else df
   }
+}
+
+object Tables {
+  /** Bytes of compressed input per task that the `*Wide` accessors
+    * size their redistribution to (`SPARK_GRAFT_WIDE_TASK_BYTES`,
+    * default 64 KB; `1` gives the pre-r19 all-cores width). */
+  def wideTaskBytes: Long =
+    Env.long("SPARK_GRAFT_WIDE_TASK_BYTES", 65536, min = 1)
 }

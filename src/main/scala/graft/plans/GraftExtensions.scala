@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * Two entry points:
   *  - `new GraftExtensions` as a `spark.sql.extensions` class for new
-  *    sessions (`SparkSession.builder.withExtensions` /
+  *    sessions (`SparkSession.Builder.withExtensions` /
   *    `--conf spark.sql.extensions=graft.plans.GraftExtensions`);
   *  - `GraftExtensions.register(spark)` to add the functions to an
   *    already-running session.

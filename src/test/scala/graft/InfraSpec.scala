@@ -45,6 +45,15 @@ class InfraSpec extends GraftSuite {
 
   // ---------------- Tables.documentsWide width (r19) ----------------
 
+  private def parquetBytes(path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    if (st.isFile) st.getLen
+    else fs.listStatus(p).filter(f => f.isFile &&
+      !f.getPath.getName.startsWith("_")).map(_.getLen).sum
+  }
+
   test("documentsWide sizes the redistribution to work, not cores") {
     // an under-split single-file table big enough that the 64 KB/task
     // floor yields a width strictly between 1 and the core count —
@@ -55,23 +64,24 @@ class InfraSpec extends GraftSuite {
           md5(concat(col("id").cast("string"), lit(k)))): _*).as("text"))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.listStatus(p).filter(f => f.isFile &&
-      !f.getPath.getName.startsWith("_")).map(_.getLen).sum
+    val bytes = parquetBytes(s"$dir/documents.parquet")
     val cores = spark.sparkContext.defaultParallelism
+    val floor = graft.io.Tables.wideTaskBytes
     val expect = math.max(1L,
-      math.min(cores.toLong, (bytes + 65535) / 65536)).toInt
-    assume(bytes > 65536 && expect < cores,
-      s"corpus came out $bytes bytes — resize the generator")
+      math.min(cores.toLong, (bytes + floor - 1) / floor)).toInt
+    assume(bytes > floor && expect < cores,
+      s"corpus came out $bytes bytes at a $floor-byte floor — resize the generator")
     val wide = graft.io.Tables(spark, dir).documentsWide
     assert(wide.rdd.getNumPartitions == expect,
-      s"width should be ceil($bytes/64K)=$expect, not cores=$cores")
+      s"width should be ceil($bytes/$floor)=$expect, not cores=$cores")
   }
 
   test("documentsWide is a no-op when one task's work fits the floor") {
     // sf0.001 documents is a few KB: est=1 splits, width=1 — the
     // accessor must return the scan untouched (no exchange)
+    val bytes = parquetBytes(s"$sfDir/documents.parquet")
+    val floor = graft.io.Tables.wideTaskBytes
+    assume(bytes <= floor, s"$bytes bytes exceed the $floor-byte floor")
     val t = graft.io.Tables(spark, sfDir)
     assert(t.documentsWide.rdd.getNumPartitions ==
       t.documents.rdd.getNumPartitions)
